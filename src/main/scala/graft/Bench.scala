@@ -25,17 +25,17 @@ object Bench {
     "ann_l2_topk", "mm_binary_meta",
     "learn_cover", "learn_weighted_sample")
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** The session both benchmark mains run in: `local[cores]`, shuffle and
+    * spill files under `SPARK_GRAFT_LOCAL_DIR`. */
+  def session(cores: Int, shufflePartitions: Int): SparkSession = {
     // shuffle/spill on tmpfs: the sandbox's single shared-host disk is not a
     // per-node NVMe; round 1 measured it serializing the whole bench at the
     // disk's bandwidth (90s -> 30s for the same pipeline)
     val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft-spark")
     new java.io.File(localDir).mkdirs()
     val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toLong)
       .config("spark.local.dir", localDir)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.autoBroadcastJoinThreshold", "256m") // the ~15MB/10^6-doc
@@ -46,6 +46,13 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = session(cpus, cpus)
 
     def time[A](f: => A): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
@@ -61,20 +68,28 @@ object Bench {
     }
     val docsPerSec = nDocs / pipelineSec
 
+    // a query that throws is named under `failed`, leaves `queries` and
+    // `total`, and makes the run exit non-zero once the JSON line is out
     val results = scala.collection.mutable.LinkedHashMap[String, Double](
       "dedup_pipeline" -> pipelineSec)
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     benchQueries.foreach { name =>
       SparkEntry.queries.get(name).foreach { fn =>
-        results(name) = try time(fn(spark, sfDir).count()) catch { case _: Throwable => -1.0 }
+        try results(name) = time(fn(spark, sfDir).count())
+        catch { case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[bench] $name failed: $e")
+          failed += name
+        }
       }
     }
 
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
-    val total = results.values.filter(_ >= 0).sum
+    val total = results.values.sum
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-        s""""docs":$nDocs,"docs_per_sec":${f"$docsPerSec%.1f"},"sf":"$sfDir"}"""
+        s""""docs":$nDocs,"docs_per_sec":${f"$docsPerSec%.1f"},"sf":"$sfDir",""" +
+        s""""failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
     // the JSON must survive sbt's log prefixes: write it to a bare file
     // (env-overridable path) AND print it as its own raw stdout line
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
@@ -82,5 +97,6 @@ object Bench {
       (json + "\n").getBytes("UTF-8"))
     println(json)
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -13,10 +13,9 @@ import org.apache.spark.sql.SparkSession
  *    trials;
  *  - each trial gets a fresh SparkSession and an untimed warmup run on a
  *    small slice (JIT + codegen; a real cluster's executors are long-lived);
- *  - shuffle/spill dirs live on tmpfs (SPARK_GRAFT_LOCAL_DIR, default
- *    /dev/shm/graft-spark): the sandbox's single shared-host disk is not a
- *    per-node NVMe and would otherwise serialize every level at the disk's
- *    bandwidth instead of measuring compute scaling;
+ *  - the session is [[Bench.session]]'s: shuffle/spill dirs on tmpfs, so
+ *    the shared-host disk does not serialize every level at its bandwidth
+ *    instead of measuring compute scaling;
  *  - output row counts are asserted identical across all trials and levels.
  *
  * Efficiency = (docs/sec at 4N) / (docs/sec at N) / 4. The corpus is sized
@@ -34,23 +33,9 @@ object ScalingBench {
     val nHi = args.lift(2).map(_.toInt).getOrElse(32)
     val mult = args.lift(3).map(_.toInt).getOrElse(60)
     val trials = args.lift(4).map(_.toInt).getOrElse(3)
-    val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft-spark")
-    new java.io.File(localDir).mkdirs()
 
     def runAt(cores: Int): (Long, Double, Long) = {
-      val spark = SparkSession.builder()
-        .master(s"local[$cores]")
-        .config("spark.sql.shuffle.partitions", math.max(cores * 2, 16))
-        .config("spark.local.dir", localDir)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.autoBroadcastJoinThreshold", "256m") // the ~15MB/10^6-doc
-      // fingerprint map must broadcast reliably at bench scale (prod jobs set
-      // 100-512m); at 10^12 docs it exceeds any threshold and AQE picks SMJ
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = Bench.session(cores, math.max(cores * 2, 16))
 
       // untimed warmup on a small slice (JIT/codegen; executors on a real
       // cluster are warm long before a 10^12-doc job's steady state)

@@ -89,7 +89,7 @@ object Blocking {
         // split the 64-bit simhash into 6 blocks and key every 3-block
         // combination (C(6,3) = 20 keys of ~32 bits). Pigeonhole: <= 3
         // flipped bits leave >= 3 blocks intact, so every pair within
-        // hamming <= simhashMaxHamming(3) shares a key. Unlike single
+        // hamming <= 3 shares a key. Unlike single
         // 16-bit chunks (65k distinct values — inherently mid-frequency on
         // realistic text), 32-bit combo keys keep document frequencies in
         // the long tail, so the pass adds candidates without feeding the
@@ -133,8 +133,9 @@ object Blocking {
     *
     * `cleanup()` releases the caches the pair generation holds (the counts
     * table and the key-partitioned kept stream); call it once the pair
-    * stream is materialized downstream ([[Pipeline]] does, after the
-    * connected-components stage). Safe to skip for one-shot sessions. */
+    * stream is materialized downstream ([[Pipeline]] and
+    * [[graft.learn.TrainedDedupe]] do, after the connected-components
+    * stage). Safe to skip for one-shot sessions. */
   final class BlockingResult(val pairs: DataFrame, stats: () => (Long, Long),
                              cached: Seq[DataFrame] = Nil) {
     private lazy val s = stats()
@@ -193,8 +194,8 @@ object Blocking {
     val kept0 = keys.join(broadcast(hot), Seq("key"), "left_anti")
     // ONE key-partitioned, cached copy feeds BOTH self-join sides (r6):
     // AQE in this Spark version does not dedupe a self-join's two
-    // identical exchanges (static planning's ReuseExchange does — measured
-    // in BenchExtra --reusecheck, and the executed pipeline plan showed the
+    // identical exchanges (static planning's ReuseExchange does — see
+    // OPTIMIZATION_r06.md §12, where the executed pipeline plan showed the
     // kept exchange materialized twice at 315 MiB each), so the join paid
     // the exchange AND the whole kept computation (key explode + anti-join)
     // twice. The cache fills once — its fill holds the single exchange —
@@ -228,39 +229,9 @@ object Blocking {
       .join(kept.as("y").hint("shuffle_hash"), joinCond)
       .select(col(s"x.$idCol").as("a"), col(s"y.$idCol").as("b"))
 
-    // `dedup = false` defers the global distinct to after the (cheap,
-    // broadcast) SimHash prefilter in Scoring — dedup-ing 10-100x fewer rows
+    // `dedup = false` defers the global distinct to Scoring's `dedupePairs`,
+    // where it shares the exchange of the first verify join
     new BlockingResult(if (dedup) pairs.distinct() else pairs, () => stats(),
       cached = Seq(counts, kept))
-  }
-
-  /** Full blocking stage: pages -> candidate pairs + signature table. */
-  def run(pages: DataFrame, cfg: DedupConfig, idCol: String = "url",
-          textCol: String = "text"): (DataFrame, BlockingResult) = {
-    val sigs = signatures(pages, cfg, idCol, textCol)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nDocs = sigs.count()
-    val keys = blockKeys(sigs, cfg, idCol, textCol)
-    val result = candidatePairs(keys, nDocs, cfg, idCol)
-    (sigs, result)
-  }
-
-  /** Verified SimHash near-duplicate pairs (secondary fingerprint pass as a
-    * standalone operator): pairs sharing a simhash chunk with hamming
-    * distance <= maxHamming. */
-  def simhashPairs(sigs: DataFrame, cfg: DedupConfig, idCol: String = "url"): DataFrame = {
-    val spark = sigs.sparkSession
-    import spark.implicits._
-    val chunkBits = 64 / cfg.simhashBands
-    val chunks = (0 until cfg.simhashBands).map { c =>
-      val chunk = shiftRightUnsigned($"simhash", c * chunkBits)
-        .bitwiseAND(lit((1L << chunkBits) - 1))
-      sigs.select(xxhash64(chunk, lit(c)).as("key"), col(idCol), $"simhash")
-    }.reduce(_ unionAll _)
-    chunks.as("x").join(chunks.as("y"), $"x.key" === $"y.key" && $"x.${idCol}" < $"y.${idCol}")
-      .select(col(s"x.$idCol").as("a"), col(s"y.$idCol").as("b"),
-        gf.hamming64($"x.simhash", $"y.simhash").as("hamming"))
-      .filter($"hamming" <= cfg.simhashMaxHamming)
-      .distinct()
   }
 }

@@ -77,30 +77,22 @@ object ClusterStage {
     }
   }
 
-  /** Singleton completion: every page not in any cluster becomes its own
-    * cluster with confidence 1.0 (`api.py:209-218`) — a left-anti join on the
-    * compact id. */
-  def addSingletons(pageIds: DataFrame, clustered: Dataset[ClusterRow],
-                    idCol: String = "nid"): DataFrame = {
-    val spark = pageIds.sparkSession
-    import spark.implicits._
-    val singles = pageIds.select(col(idCol).as("nid"))
-      .join(clustered.select($"nid"), Seq("nid"), "left_anti")
-      .select($"nid", $"nid".as("cluster_nid"), lit(1.0).as("confidence"))
-    clustered.toDF().unionAll(singles)
-  }
-
-  /** Fused [[addSingletons]] + [[toUrls]] (r6, guide §2.4): one LEFT join of
-    * the (nid, url) table against the cluster rows replaces the anti-join +
-    * union + inner join — pages missing from `clustered` coalesce to their
-    * own singleton cluster in the same pass. Row-for-row identical output
-    * (each nid appears in at most one cluster row, each exactly once in
-    * `ids`). */
-  def completeAndLabel(ids: DataFrame, clustered: Dataset[ClusterRow]): DataFrame = {
-    val byNid = ids.join(clustered.toDF(), Seq("nid"), "left")
-      .select(col("url"),
+  /** Singleton completion (`api.py:209-218`): each row of `ids` (`nid` plus
+    * any columns carried along) gets its `cluster_nid` and `confidence`, and
+    * an nid missing from `clustered` becomes its own cluster with confidence
+    * 1.0 — one LEFT join. Each nid appears in at most one cluster row, so
+    * every row of `ids` comes out exactly once. */
+  def withSingletons(ids: DataFrame, clustered: Dataset[ClusterRow]): DataFrame =
+    ids.join(clustered.toDF(), Seq("nid"), "left")
+      .select(ids.columns.map(col).toSeq ++ Seq(
         coalesce(col("cluster_nid"), col("nid")).as("cluster_nid"),
-        coalesce(col("confidence"), lit(1.0)).as("confidence"))
+        coalesce(col("confidence"), lit(1.0)).as("confidence")): _*)
+
+  /** Singleton completion + url labeling (r6, guide §2.4): [[withSingletons]]
+    * over the (nid, url) table, then each cluster is named by its
+    * lexicographically smallest member url. */
+  def completeAndLabel(ids: DataFrame, clustered: Dataset[ClusterRow]): DataFrame = {
+    val byNid = withSingletons(ids, clustered)
     // Cluster naming as a window min over ONE pass of byNid (r6, guide §2.4):
     // the groupBy + rejoin shape evaluated the ids⋈clustered join subtree
     // twice (Spark has no cross-branch subplan sharing) and paid an extra
@@ -111,17 +103,5 @@ object ClusterStage {
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("cluster_nid"))
     byNid.select(col("url"), min(col("url")).over(w).as("cluster_id"),
       col("confidence"))
-  }
-
-  /** Map compact-id cluster rows back to urls; the public cluster_id is the
-    * lexicographically smallest member url (deterministic, human-readable).
-    * @param ids (nid, url) mapping table */
-  def toUrls(clusters: DataFrame, ids: DataFrame): DataFrame = {
-    val byNid = clusters.join(ids, Seq("nid"))
-      .select(col("url"), col("cluster_nid"), col("confidence"))
-    val clusterName = byNid.groupBy(col("cluster_nid"))
-      .agg(min(col("url")).as("cluster_id"))
-    byNid.join(clusterName, Seq("cluster_nid"))
-      .select(col("url"), col("cluster_id"), col("confidence"))
   }
 }

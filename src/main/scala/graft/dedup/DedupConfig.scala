@@ -36,8 +36,6 @@ object DedupConfig {
       hotKeyAbsCap = if (m.has("hotKeyAbsCap")) m.get("hotKeyAbsCap").asLong else 50L,
       maxComponents = m.get("maxComponents").asInt,
       useSimHash = m.get("useSimHash").asBoolean,
-      simhashBands = m.get("simhashBands").asInt,
-      simhashMaxHamming = m.get("simhashMaxHamming").asInt,
       useSuffix = m.get("useSuffix").asBoolean,
       suffixWidth = m.get("suffixWidth").asInt,
       suffixEvery = m.get("suffixEvery").asInt,
@@ -95,18 +93,13 @@ final case class DedupConfig(
       * expected). [[ClusterStage.clusterComponents]] fails loudly (not
       * OOM) if an over-cap component ever reaches it. */
     maxComponents: Int = 30000,
-    /** SimHash secondary fingerprint. `useSimHash` gates the flagship
-      * blocking pass, whose key scheme is FIXED: Manku 6-block/choose-3
-      * combination keys with a pigeonhole guarantee of hamming <= 3
-      * (see [[Blocking.blockKeys]]) — `simhashBands`/`simhashMaxHamming` do
-      * NOT parameterize it. The two fields govern only the standalone
-      * verified-pair helper [[Blocking.simhashPairs]]: 64 bits split into
-      * `simhashBands` chunks, pairs sharing a chunk kept when within
-      * `simhashMaxHamming` (pigeonhole: catches all pairs with
-      * < simhashBands differing chunks). */
+    /** SimHash secondary fingerprint: gates the flagship blocking pass,
+      * whose key scheme is FIXED — Manku 6-block/choose-3 combination keys
+      * with a pigeonhole guarantee of hamming <= 3 (see
+      * [[Blocking.blockKeys]]) — and the in-join prefilter at
+      * `scoreMaxHamming`. When false every fingerprint is 0, so no pair is
+      * prefiltered. */
     useSimHash: Boolean = true,
-    simhashBands: Int = 4,
-    simhashMaxHamming: Int = 3,
     /** Suffix-array substring pass: fixed-width sampled suffix keys. */
     useSuffix: Boolean = true,
     suffixWidth: Int = 40,
@@ -142,14 +135,12 @@ final case class DedupConfig(
       * blocking stage's sampled suffix keys). */
     lcsPrefix: Int = 256) {
   require(numHashes % bands == 0, "numHashes must be divisible by bands")
-  require(64 % simhashBands == 0, "simhashBands must divide 64")
   def rows: Int = numHashes / bands
 
   def toJson: String =
     s"""{"version":$version,"shingleK":$shingleK,"numHashes":$numHashes,"bands":$bands,""" +
       s""""seed":$seed,"threshold":$threshold,"minScore":$minScore,"scoreMaxHamming":$scoreMaxHamming,"hotKeyMin":$hotKeyMin,"hotKeyFrac":$hotKeyFrac,"hotKeyAbsCap":$hotKeyAbsCap,""" +
-      s""""maxComponents":$maxComponents,"useSimHash":$useSimHash,"simhashBands":$simhashBands,""" +
-      s""""simhashMaxHamming":$simhashMaxHamming,"useSuffix":$useSuffix,"suffixWidth":$suffixWidth,""" +
+      s""""maxComponents":$maxComponents,"useSimHash":$useSimHash,"useSuffix":$useSuffix,"suffixWidth":$suffixWidth,""" +
       s""""suffixEvery":$suffixEvery,"useExact":$useExact,"exactIds":$exactIds,""" +
       s""""scoreLcs":$scoreLcs,"lcsWindow":$lcsWindow,"lcsPrefix":$lcsPrefix}"""
 }

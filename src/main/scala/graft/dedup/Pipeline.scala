@@ -200,10 +200,11 @@ object Pipeline {
     }
     record("pairs", pairs, hotDropped)
 
-    // 4. scored pairs (prefilter already applied in-join above)
+    // 4. scored pairs, with no second prefilter (maxHamming stays 64): the
+    // in-join prefilter above already applied `scoreMaxHamming`, and with
+    // useSimHash = false every fingerprint is 0, so no pair could fail it
     val scored = stage("scored") {
-      Scoring.scorePairs(pairs, sigs, idCol = "nid", minScore = cfg.minScore,
-        maxHamming = if (inJoinPrefilter) 64 else cfg.scoreMaxHamming, dedupePairs = true,
+      Scoring.scorePairs(pairs, sigs, idCol = "nid", minScore = cfg.minScore, dedupePairs = true,
         scoreLcs = cfg.scoreLcs, lcsWindow = cfg.lcsWindow, lcsPrefix = cfg.lcsPrefix,
         suffixWidth = cfg.suffixWidth, suffixEvery = cfg.suffixEvery,
         seed = cfg.seed, lcsDfCap = cfg.hotKeyAbsCap)
@@ -226,7 +227,6 @@ object Pipeline {
     val clusters = stage("clusters") {
       val clustered = ClusterStage.clusterComponents(labeled, cfg.threshold, cfg.maxComponents)
       // singleton completion + url labeling fused into one left join
-      // (ClusterStage.completeAndLabel) — same rows as addSingletons+toUrls
       ClusterStage.completeAndLabel(normalized.select($"nid", $"url"), clustered)
     }
     record("clusters", clusters)

@@ -31,13 +31,6 @@ import graft.expr.{functions => gf}
 object Scoring {
 
   /**
-   * @param pairs (a, b) with a < b
-   * @param sigs  signature table with (url, shingles, simhash)
-   * @param minScore  exact-Jaccard floor (see [[DedupConfig.minScore]])
-   * @param maxHamming SimHash prefilter radius; 64 disables the prefilter
-   * @return (a, b, score: float) with score > max(0, minScore) rows only
-   */
-  /**
    * Normalized suffix-pass LCS scores for candidate pairs — the
    * "longest-common-substring length from the suffix pass" score signal
    * (north rule). Same diagonal-run identity as the catalog
@@ -103,11 +96,18 @@ object Scoring {
       .distinct()
   }
 
+  /**
+   * @param pairs (a, b) with a < b
+   * @param sigs  signature table with (url, shingles, simhash)
+   * @param minScore  exact-Jaccard floor (see [[DedupConfig.minScore]])
+   * @param maxHamming SimHash prefilter radius; 64 disables the prefilter
+   * @return (a, b, score: float) with score > max(0, minScore) rows only
+   */
   def scorePairs(pairs: DataFrame, sigs: DataFrame, idCol: String = "url",
                  minScore: Double = 0.0, maxHamming: Int = 64,
                  dedupePairs: Boolean = false,
                  scoreLcs: Boolean = false, lcsWindow: Int = 6,
-                 lcsPrefix: Int = 256, lcsCoBlock: Boolean = true,
+                 lcsPrefix: Int = 256,
                  suffixWidth: Int = 40, suffixEvery: Int = 20,
                  seed: Long = 42L, lcsDfCap: Long = 50L): DataFrame = {
     val prefiltered =
@@ -159,13 +159,11 @@ object Scoring {
         require(sigs.columns.contains("text"),
           "scoreLcs needs the signature table to carry the text column")
         val texts = sigs.select(col(idCol), col("text"))
-        val lcsPairs =
-          if (!lcsCoBlock) surviving.select(col("a"), col("b"))
-          else surviving.select(col("a"), col("b"))
-            .unionByName(suffixCoBlockedPairs(texts, idCol,
-              suffixWidth, suffixEvery, seed, lcsDfCap))
-            // duplicates would corrupt the gaps-and-islands run counts
-            .distinct()
+        val lcsPairs = surviving.select(col("a"), col("b"))
+          .unionByName(suffixCoBlockedPairs(texts, idCol,
+            suffixWidth, suffixEvery, seed, lcsDfCap))
+          // duplicates would corrupt the gaps-and-islands run counts
+          .distinct()
         val lcs = lcsScores(lcsPairs, texts, idCol, lcsWindow, lcsPrefix)
         jac.join(lcs, Seq("a", "b"), "full_outer")
           .select(col("a"), col("b"),

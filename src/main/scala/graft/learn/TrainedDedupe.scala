@@ -159,7 +159,11 @@ object TrainedDedupe {
   /** Same, over already-resolved rules (incl. compound conjunctions from
     * [[PredicateZoo.resolve]]). */
   def blockPairsResolved(records: DataFrame, active: Seq[NamedPredicate],
-                         cfg: DedupConfig): DataFrame = {
+                         cfg: DedupConfig): DataFrame =
+    blockResolved(records, active, cfg).pairs
+
+  private def blockResolved(records: DataFrame, active: Seq[NamedPredicate],
+                            cfg: DedupConfig): Blocking.BlockingResult = {
     val spark = records.sparkSession
     import spark.implicits._
     require(active.nonEmpty, "no learned predicates to block with")
@@ -175,7 +179,7 @@ object TrainedDedupe {
       .toDF("key", "rid")
       .distinct() // a predicate can emit one key many times; reference
                   // relies on its unique (block_key, record_id) index
-    Blocking.candidatePairs(keys, records.count(), cfg, idCol = "rid").pairs
+    Blocking.candidatePairs(keys, records.count(), cfg, idCol = "rid")
   }
 
   /** Two-sided learned-predicate candidate pairs — the blocking stage of
@@ -323,7 +327,11 @@ object TrainedDedupe {
     * over every learned rule (incl. cross-field conjunctions), then the
     * flagship's hot-key-capped within-key self-join. */
   def blockPairsFields(records: DataFrame, active: Seq[BoundRule],
-                       cfg: DedupConfig): DataFrame = {
+                       cfg: DedupConfig): DataFrame =
+    blockFields(records, active, cfg).pairs
+
+  private def blockFields(records: DataFrame, active: Seq[BoundRule],
+                          cfg: DedupConfig): Blocking.BlockingResult = {
     val spark = records.sparkSession
     import spark.implicits._
     require(active.nonEmpty, "no learned predicates to block with")
@@ -341,7 +349,7 @@ object TrainedDedupe {
       }
       .toDF("key", "rid")
       .distinct()
-    Blocking.candidatePairs(keys, records.count(), cfg, idCol = "rid").pairs
+    Blocking.candidatePairs(keys, records.count(), cfg, idCol = "rid")
   }
 
   /** Resolve learned rules (from [[Settings.rules]]) against a variable
@@ -370,22 +378,15 @@ object TrainedDedupe {
                       cfg: DedupConfig = DedupConfig()): DataFrame = {
     val fields = vars.map(_.field).distinct
     val r = records.select(col("rid").cast("long").as("rid") +: fields.map(col): _*)
-    val pairs = blockPairsFields(r, resolveFields(settings.rules, vars), cfg)
     val aSide = r.select(col("rid").as("a") +: fields.map(f => col(f).as(s"${f}_a")): _*)
     val bSide = r.select(col("rid").as("b") +: fields.map(f => col(f).as(s"${f}_b")): _*)
-    val scored = pairs
-      .join(aSide, Seq("a")).join(bSide, Seq("b"))
-      .select(col("a"), col("b"),
-        LogisticRegression.scoreColumn(settings.model,
-          DataModel.featureColumns(vars, f => col(s"${f}_a"), f => col(s"${f}_b")))
-          .cast("float").as("score"))
-      .filter(col("score") > 1e-6f) // predict_proba exact-zero drop analogue
-    val labeled = ConnectedComponents.withRefilter(scored, cfg.maxComponents)
-    val clustered = ClusterStage.clusterComponents(labeled, threshold, cfg.maxComponents)
-    val withSingles = ClusterStage.addSingletons(
-      r.select(col("rid").as("nid")), clustered)
-    withSingles.select(col("nid").as("rid"), col("cluster_nid").as("cluster_id"),
-      col("confidence"))
+    clusterTail(r, blockFields(r, resolveFields(settings.rules, vars), cfg), threshold, cfg) {
+      _.join(aSide, Seq("a")).join(bSide, Seq("b"))
+        .select(col("a"), col("b"),
+          LogisticRegression.scoreColumn(settings.model,
+            DataModel.featureColumns(vars, f => col(s"${f}_a"), f => col(s"${f}_b")))
+            .cast("float").as("score"))
+    }
   }
 
   /**
@@ -521,23 +522,36 @@ object TrainedDedupe {
   def partition(records: DataFrame, settings: Settings, threshold: Double = 0.5,
                 preds: Seq[NamedPredicate] = PredicateZoo.stringPredicates("f"),
                 cfg: DedupConfig = DedupConfig()): DataFrame = {
-    val spark = records.sparkSession
-    import spark.implicits._
     val r = records.select(col("rid").cast("long").as("rid"), col("f"))
-    val pairs = blockPairsResolved(r, PredicateZoo.resolve(settings.rules, preds), cfg)
     val sides = r.select(col("rid"), col("f"))
-    val scored = pairs
-      .join(sides.select(col("rid").as("a"), col("f").as("f_a")), Seq("a"))
-      .join(sides.select(col("rid").as("b"), col("f").as("f_b")), Seq("b"))
-      .select(col("a"), col("b"),
-        LogisticRegression.scoreColumn(settings.model,
-          features(col("f_a"), col("f_b"))).cast("float").as("score"))
-      .filter(col("score") > 1e-6f) // predict_proba exact-zero drop analogue
-    val labeled = ConnectedComponents.withRefilter(scored, cfg.maxComponents)
+    clusterTail(r, blockResolved(r, PredicateZoo.resolve(settings.rules, preds), cfg), threshold, cfg) {
+      _.join(sides.select(col("rid").as("a"), col("f").as("f_a")), Seq("a"))
+        .join(sides.select(col("rid").as("b"), col("f").as("f_b")), Seq("b"))
+        .select(col("a"), col("b"),
+          LogisticRegression.scoreColumn(settings.model,
+            features(col("f_a"), col("f_b"))).cast("float").as("score"))
+    }
+  }
+
+  /** The cluster tail of [[partition]] and [[partitionFields]]: scored
+    * candidate pairs (score > 0 kept, the classifier-zero drop
+    * `core.py:81-84`) → refiltered connected components → per-component
+    * centroid linkage → singleton completion. `withRefilter` materializes the
+    * scored edges, so the blocking caches are released as soon as it
+    * returns, or fails.
+    * @param records (rid, ...) every record of the partition
+    * @param score (a, b) candidate pairs → (a, b, score: float)
+    * @return (rid, cluster_id, confidence) */
+  private def clusterTail(records: DataFrame, blocking: Blocking.BlockingResult,
+                          threshold: Double, cfg: DedupConfig)
+                         (score: DataFrame => DataFrame): DataFrame = {
+    val labeled =
+      try ConnectedComponents.withRefilter(
+        score(blocking.pairs).filter(col("score") > 1e-6f), // predict_proba exact-zero drop analogue
+        cfg.maxComponents)
+      finally blocking.cleanup()
     val clustered = ClusterStage.clusterComponents(labeled, threshold, cfg.maxComponents)
-    val withSingles = ClusterStage.addSingletons(
-      r.select(col("rid").as("nid")), clustered)
-    withSingles.select(col("nid").as("rid"), col("cluster_nid").as("cluster_id"),
-      col("confidence"))
+    ClusterStage.withSingletons(records.select(col("rid").as("nid")), clustered)
+      .select(col("nid").as("rid"), col("cluster_nid").as("cluster_id"), col("confidence"))
   }
 }

@@ -19,25 +19,6 @@ class DedupPipelineSpec extends AnyFunSuite {
   private lazy val pages = WebText.synthetic(spark, 300).toDF().cache()
   private lazy val clusters = Pipeline.run(spark, pages, cfg).cache()
 
-  test("simhashPairs: chunk blocking finds EXACTLY the pairs within the hamming radius") {
-    // pigeonhole: with simhashBands chunks, any pair within
-    // simhashMaxHamming < simhashBands flipped bits shares a chunk — so the
-    // chunk-blocked verified pairs must equal the brute-force filter
-    val small = WebText.synthetic(spark, 40).toDF()
-    val sigs = Blocking.signatures(small.select($"url", $"text"), cfg)
-    val got = Blocking.simhashPairs(sigs, cfg)
-      .as[(String, String, Int)].collect()
-    assert(got.forall(_._3 <= cfg.simhashMaxHamming))
-    val fps = sigs.select($"url", $"simhash").as[(String, Long)].collect().toMap
-    val expected = (for {
-      x <- fps.keys; y <- fps.keys if x < y
-      if graft.texthash.TextHash.hamming64(fps(x), fps(y)) <= cfg.simhashMaxHamming
-    } yield (x, y)).toSet
-    assert(got.map(p => (p._1, p._2)).toSet == expected,
-      s"chunk-blocked pairs must equal the brute-force radius filter (${expected.size} expected)")
-    assert(expected.nonEmpty, "fixture must contain at least one near-identical pair")
-  }
-
   test("every input url appears in exactly one output cluster (api.py:209-218)") {
     val n = pages.count()
     assert(clusters.count() == n)
@@ -161,9 +142,26 @@ class DedupPipelineSpec extends AnyFunSuite {
       s"suffix co-blocking must surface exactly the containment pair, got ${rescued.toSeq}")
     assert(rescued.head._3 > 0.4f && rescued.head._3 < 0.6f,
       s"expected lcs/prefix ~0.47, got ${rescued.head._3}")
-    // and with co-blocking disabled the pair is invisible (the r4 behavior)
-    assert(Scoring.scorePairs(noPairs, sigs, minScore = cfg.minScore,
-      maxHamming = cfg.scoreMaxHamming, scoreLcs = true, lcsCoBlock = false).count() === 0L)
+  }
+
+  test("useSimHash = false: every input url appears exactly once") {
+    // every fingerprint is 0 here, so neither prefilter can drop a pair
+    val urls = Pipeline.run(spark, pages, cfg.copy(useSimHash = false))
+      .select($"url").as[String].collect()
+    assert(urls.length == pages.count())
+    assert(urls.toSet == pages.select($"url").as[String].collect().toSet)
+  }
+
+  test("config.json with the removed simhash fields still resumes") {
+    // written by the build that still had simhashBands/simhashMaxHamming,
+    // which never changed the pipeline's output
+    val old = """{"version":1,"shingleK":5,"numHashes":128,"bands":16,"seed":42,""" +
+      """"threshold":0.5,"minScore":0.3,"scoreMaxHamming":16,"hotKeyMin":1000,""" +
+      """"hotKeyFrac":0.05,"hotKeyAbsCap":50,"maxComponents":30000,"useSimHash":true,""" +
+      """"simhashBands":4,"simhashMaxHamming":3,"useSuffix":true,"suffixWidth":40,""" +
+      """"suffixEvery":20,"useExact":true,"exactIds":false,"scoreLcs":false,""" +
+      """"lcsWindow":6,"lcsPrefix":256}"""
+    assert(DedupConfig.fromJson(old) == DedupConfig())
   }
 
   test("pipeline under scoreLcs config: recall and singleton completeness hold") {

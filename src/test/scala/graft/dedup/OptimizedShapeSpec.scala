@@ -134,11 +134,11 @@ class OptimizedShapeSpec extends AnyFunSuite {
 
   // ------------------------------------------------- cluster tail equivalence
 
-  test("completeAndLabel == addSingletons + toUrls (row-for-row)") {
+  test("completeAndLabel == driver-side reference (row-for-row)") {
     val cfg = DedupConfig()
     val pages = WebText.synthetic(spark, 400).toDF()
     val clusters = Pipeline.run(spark, pages, cfg) // exercises completeAndLabel
-    // reference composition over the same clustered rows
+    // the same clustered rows, from the stage calls Pipeline.run makes
     val normalized = pages.select($"url", xxhash64($"url").as("nid"))
     val sigs = Blocking.signatures(
       pages.select($"url", xxhash64($"url").as("nid"), gf.normalize_text($"text").as("text"))
@@ -151,13 +151,21 @@ class OptimizedShapeSpec extends AnyFunSuite {
       minScore = cfg.minScore, maxHamming = 64, dedupePairs = true)
     val labeled = ConnectedComponents.withRefilter(scored, cfg.maxComponents)
     val clustered = ClusterStage.clusterComponents(labeled, cfg.threshold, cfg.maxComponents)
-    val old = ClusterStage.toUrls(
-      ClusterStage.addSingletons(normalized.select($"nid"), clustered),
-      normalized.select($"nid", $"url"))
+      .collect().map(r => r.nid -> r).toMap
+    // reference on the driver: a missing nid is its own cluster with
+    // confidence 1.0, and a cluster is named by its smallest member url
+    val byNid = normalized.as[(String, Long)].collect().map { case (url, nid) =>
+      clustered.get(nid).fold((url, nid, 1.0))(r => (url, r.cluster_nid, r.confidence))
+    }
+    val name = byNid.groupBy(_._2).map { case (c, ms) => c -> ms.map(_._1).min }
+    val reference = byNid.map { case (url, c, conf) => (url, name(c), conf) }.toSeq
+      .toDF("url", "cluster_id", "confidence")
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.select($"url", $"cluster_id", round($"confidence", 9).as("c"))
         .as[(String, String, Double)].collect().sorted.toSeq
-    assert(canon(clusters) == canon(old))
+    assert(clustered.nonEmpty && clustered.size < byNid.length,
+      "fixture must have both clustered and singleton pages")
+    assert(canon(clusters) == canon(reference))
     sigs.unpersist()
   }
 

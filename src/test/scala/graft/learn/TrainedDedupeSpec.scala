@@ -55,6 +55,21 @@ class TrainedDedupeSpec extends AnyFunSuite {
       "different entities merged into one cluster")
   }
 
+  test("partition releases the blocking caches it creates") {
+    val settings = TrainedDedupe.train(labeledDf, recordsDf)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    TrainedDedupe.partition(recordsDf, settings).collect()
+    // the components stage's local checkpoint is only weakly held: it leaves
+    // the map once garbage-collected, unlike a cache nobody unpersisted
+    def added = sc.getPersistentRDDs.keySet -- before
+    var tries = 0
+    while (added.nonEmpty && tries < 20) {
+      System.gc(); Thread.sleep(100); tries += 1
+    }
+    assert(added.isEmpty, s"persistent RDDs left behind: ${added.toSeq.sorted}")
+  }
+
   test("trained loop is deterministic end to end") {
     val s1 = TrainedDedupe.train(labeledDf, recordsDf)
     val s2 = TrainedDedupe.train(labeledDf, recordsDf)
